@@ -178,10 +178,11 @@ class ResultCache:
             return value
 
     def lookup(self, sql: str, now: datetime | None) -> tuple[str, object]:
-        """Three-state probe: ('rows', (rows, schema)) when materialized,
-        ('warm', None) when this statement repeated within the TTL (caller
-        should collect + put), ('cold', None) on first sight (caller returns
-        the lazy plan untouched).
+        """Three-state probe: ('rows', value) when materialized (the value
+        the caller ``put``; the engine stores a LocalRelation frame of the
+        collected rows), ('warm', None) when this statement repeated
+        within the TTL (caller should collect + put), ('cold', None) on
+        first sight (caller returns the lazy plan untouched).
 
         Materialized rows key on the TTL-bucketed key (reference
         semantics: a LAST window's cached result is only valid within its

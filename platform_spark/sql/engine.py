@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 
@@ -64,10 +65,16 @@ class KafSqlEngine:
         self._now = now
 
     # ------------------------------------------------------------------
-    def collect_with_timeout(self, df: DataFrame, timeout: float | None = None):
-        """Run an action under the engine's query timeout (the analogue of
-        the reference's per-query context deadline, server.go:472-478):
-        the job group is cancelled when the deadline passes.
+    def collect_with_timeout(
+        self,
+        df: DataFrame,
+        timeout: float | None = None,
+        action: Callable[[DataFrame], Any] = DataFrame.collect,
+    ):
+        """Run ``action(df)`` (default: ``df.collect()``) under the
+        engine's query timeout (the analogue of the reference's per-query
+        context deadline, server.go:472-478): the job group is cancelled
+        when the deadline passes.
 
         The canceller is a REAPER LOOP, not a one-shot timer:
         ``cancelJobGroup`` only cancels jobs that are ACTIVE when it is
@@ -83,7 +90,7 @@ class KafSqlEngine:
 
         timeout = timeout if timeout is not None else self.opt.timeout_seconds
         if timeout is None:
-            return df.collect()
+            return action(df)
         sc = self.spark.sparkContext
         group = f"kafsql-{uuid.uuid4().hex[:8]}"
         sc.setJobGroup(group, "kafsql query", interruptOnCancel=True)
@@ -103,7 +110,7 @@ class KafSqlEngine:
         )
         reaper.start()
         try:
-            return df.collect()
+            return action(df)
         except Exception as e:  # noqa: BLE001
             # only report a timeout if OUR reaper actually cancelled the
             # job; genuine failures (analysis errors, OOM, source errors)
@@ -154,8 +161,13 @@ class KafSqlEngine:
                 value = "<unset>"
         else:
             raise GovernanceError(f"unknown setting {name!r}")
-        # settings affect compiled results — cached rows are now stale
+        # settings affect compiled results — cached rows are now stale,
+        # and a dotted spark.sql.* conf (e.g. nanosAsLong) can change how
+        # a resolved topic frame was analyzed
         self.cache.clear()
+        reset_frames = getattr(self.catalog, "reset_frames", None)
+        if reset_frames is not None:
+            reset_frames()
         return self.spark.createDataFrame(
             [(name, value)], "name: string, value: string"
         )
@@ -194,23 +206,33 @@ class KafSqlEngine:
             if cacheable:
                 state, hit = self.cache.lookup(statement, self._now)
                 if state == "rows":
-                    # serve materialized rows as a local relation: no Spark
-                    # job runs for a cache hit (result_cache.go:26-110)
-                    rows, schema = hit
-                    return self.spark.createDataFrame(rows, schema)
+                    # a hit is the stored LocalRelation frame: its plan is
+                    # a LocalTableScan, so collecting it runs no Spark job
+                    # (result_cache.go:26-110)
+                    return hit
             df = self.compiler.compile(q)
             if cacheable and state == "warm":
                 # collect-on-repeat: the statement recurred within a TTL
                 # window, so materialize ROWS now (the reference caches rows,
                 # not plans — result_cache.go); one-shot queries stay lazy
-                # and never pay a driver round-trip
-                rows = self.collect_with_timeout(df)
+                # and never pay a driver round-trip. Rows stay in the JVM
+                # and become one LocalRelation, so neither this return nor
+                # any later hit re-parallelizes Python rows into a job.
+                jrows = self.collect_with_timeout(
+                    df, action=lambda d: d._jdf.collectAsList()
+                )
+                local = DataFrame(
+                    self.spark._jsparkSession.createDataFrame(
+                        jrows, df._jdf.schema()
+                    ),
+                    self.spark,
+                )
                 self.cache.put(
                     self.cache.key(statement, self._now),
-                    (rows, df.schema),
-                    n_rows=len(rows),
+                    local,
+                    n_rows=jrows.size(),
                 )
-                return self.spark.createDataFrame(rows, df.schema)
+                return local
             return df
 
     # -- governance -----------------------------------------------------

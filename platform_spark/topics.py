@@ -164,14 +164,16 @@ def assign_partition_offsets(
     # n_chunks <= 256 keeps this under ~1k rows of SQL text.
     for c, p, b in bases:
         # a NULL _partition (or chunk) would render as the token 'None'
-        # and die in an opaque SQL parse error; fail with the real cause
-        # (ADVICE r15 — unreachable for current envelopes, whose
-        # _partition derives from a non-NULL pk, but this is a general
-        # helper)
-        if not isinstance(c, int) or not isinstance(p, int) or not isinstance(b, int):
+        # and die in an opaque SQL parse error, and a bool one (an int
+        # subclass, hence `type(x) is int`) as 'True' that coerces
+        # silently; fail with the real cause (unreachable for current
+        # envelopes, whose _partition derives from a non-NULL pk, but
+        # this is a general helper)
+        if type(c) is not int or type(p) is not int or type(b) is not int:
             raise ValueError(
                 f"assign_partition_offsets: non-int chunk/partition/base "
-                f"({c!r}, {p!r}, {b!r}) — NULL _partition in the input?"
+                f"({c!r}, {p!r}, {b!r}) — NULL or non-integer _partition "
+                "in the input?"
             )
     values = ",".join(f"({c},{p},{b})" for c, p, b in bases)
     base_df = F.broadcast(
@@ -277,6 +279,19 @@ def materialize_envelope(
             F.lit("/segment-0.kfs"),
         )
     return ranked.withColumn("_segment", seg)
+
+
+#: binary-unit suffixes of Spark's size confs (JavaUtils.byteStringAs)
+_BYTE_SUFFIXES = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40, "p": 1 << 50}
+
+
+def byte_string_bytes(value: str) -> int:
+    """Bytes in a Spark size string: a bare count or a unit-suffixed form
+    ('128m', '1g', '128MB', '1t'). A bare ``int()`` on the suffixed forms
+    would fail and silently ignore a user-tuned size."""
+    v = value.strip().lower().rstrip("b")
+    mult = _BYTE_SUFFIXES.get(v[-1:], 1)
+    return int(v[:-1] if mult > 1 else v) * mult
 
 
 #: schema-on-read types (config.go:346-353)
@@ -401,6 +416,9 @@ class TopicCatalog:
         self.sf_dir = sf_dir
         self.configs = dict(configs or DEFAULT_TOPIC_CONFIGS)
         self._materialized: dict[str, str] = {}
+        #: finished topic frames of materialized versions, by (topic,
+        #: with_schema_columns) -> (version path, frame); see topic()
+        self._frames: dict[tuple[str, bool], tuple[str, DataFrame]] = {}
         #: lazy materialization root: on first access each topic is written
         #: as `_partition`-partitioned parquet (version-keyed by envelope
         #: SQL), so every later query scans real files with partition
@@ -456,23 +474,47 @@ class TopicCatalog:
         return sorted(self.configs)
 
     def topic(self, name: str, with_schema_columns: bool = True) -> DataFrame:
-        """Topic DataFrame: 8 implicit columns (+ declared schema columns)."""
+        """Topic DataFrame: 8 implicit columns (+ declared schema columns).
+
+        A materialized version dir never changes once written (a new
+        version gets a new path), so its finished frame is built once and
+        the same DataFrame is returned on every later call: no repeated
+        file listing, schema-inference job or projection analysis per
+        query. Envelope views are rebuilt per call."""
         if name not in env.ENVELOPE_BUILDERS:
             raise KeyError(f"unknown topic {name!r}")
         if name not in self._materialized and self.cache_root:
             self.materialize(name, self.cache_root)
-        if name in self._materialized:
+        path = self._materialized.get(name)
+        if path is not None:
             # refresh the version dir's mtime: the prune grace period keys
             # on LAST USE, and parquet reads never update mtime — without
             # this touch a long-lived engine's pinned version would age out
             # while still being queried
             try:
-                os.utime(self._materialized[name])
+                os.utime(path)
             except OSError:
                 pass
-            df = self.spark.read.parquet(self._materialized[name])
-        else:
-            df = self.spark.sql(env.ENVELOPE_BUILDERS[name](env.SPARK))
+            # unlocked check-then-set: concurrent first calls may each
+            # build an equivalent frame, and the last one stored wins
+            cached = self._frames.get((name, with_schema_columns))
+            if cached is not None and cached[0] == path:
+                return cached[1]
+            df = self._finish(name, self.spark.read.parquet(path), with_schema_columns)
+            self._frames[(name, with_schema_columns)] = (path, df)
+            return df
+        return self._finish(
+            name,
+            self.spark.sql(env.ENVELOPE_BUILDERS[name](env.SPARK)),
+            with_schema_columns,
+        )
+
+    def reset_frames(self) -> None:
+        """Forget the resolved topic frames: session confs they were
+        analyzed under (e.g. parquet schema inference) may have changed."""
+        self._frames.clear()
+
+    def _finish(self, name: str, df: DataFrame, with_schema_columns: bool) -> DataFrame:
         df = df.select(*IMPLICIT_COLUMNS)
         # normalize `_ts` to TimestampType (session tz = UTC, so NTZ inputs
         # convert identically) — one timestamp semantics across all topics
@@ -581,13 +623,8 @@ class TopicCatalog:
             return None
 
         def _conf_bytes(key: str, default: int) -> int:
-            # accept the unit-suffixed forms Spark does ('128m', '1g',
-            # '128MB') — a bare int() on those silently fell back to the
-            # default, ignoring a user-tuned split size (ADVICE r15)
             try:
-                v = self.spark.conf.get(key).lower().rstrip("b")
-                mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}.get(v[-1:], 1)
-                return int(v[:-1] if mult > 1 else v) * mult
+                return byte_string_bytes(self.spark.conf.get(key))
             except Exception:
                 return default
 

@@ -13,6 +13,7 @@ from platform_spark.topics import (
     IMPLICIT_COLUMNS,
     TopicCatalog,
     assign_partition_offsets,
+    byte_string_bytes,
     materialize_envelope,
 )
 from tests.conftest import SF_DIR
@@ -148,3 +149,31 @@ def test_assign_offsets_null_chunk_key_fails_loudly(spark):
     )
     with pytest.raises(ValueError, match="NULL for 5 of 10 rows"):
         assign_partition_offsets(df, "CAST(_key AS BIGINT)", ("_key",), 4)
+
+
+def test_assign_offsets_bool_partition_fails_loudly(spark):
+    """A bool `_partition` is an int subclass; it must fail with the real
+    cause instead of rendering as the SQL token True."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(10).select(
+        F.col("id").alias("k"), (F.col("id") % 2 == 0).alias("_partition")
+    )
+    with pytest.raises(ValueError, match="non-int chunk/partition/base"):
+        assign_partition_offsets(df, "k", ("k",), 2)
+
+
+@pytest.mark.parametrize(
+    "text, n",
+    [
+        ("4096", 4096),
+        ("64k", 64 << 10),
+        ("128m", 128 << 20),
+        ("128MB", 128 << 20),
+        ("1g", 1 << 30),
+        ("1t", 1 << 40),
+        ("2p", 2 << 50),
+    ],
+)
+def test_byte_string_suffixes(text, n):
+    assert byte_string_bytes(text) == n
